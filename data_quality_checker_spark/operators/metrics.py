@@ -189,9 +189,7 @@ def numeric_histogram(
     )
 
 
-def summary_stats(
-    df: DataFrame, cols: list[str], scalable: bool = True
-) -> DataFrame:
+def summary_stats(df: DataFrame, cols: list[str]) -> DataFrame:
     """A16 — the ``df.describe(include='all')`` block of the reference's
     report (src/core/reporting.py:35), long-format and EXACT (linear-
     interpolation percentiles, like pandas; Spark's df.summary() uses
@@ -199,15 +197,12 @@ def summary_stats(
     → (column, n, mean, stddev, min, q25, median, q75, max), one row per
     requested numeric column.
 
-    ``scalable=True`` (default): the moment stats come from one cheap
-    aggregate pass and the three quantiles per column from
-    outliers.exact_quantiles_scalable — bracket-and-count selection,
-    bit-identical to ``percentile()`` but never buffering a column in
-    one aggregator. The exact ``percentile`` path (``scalable=False``)
-    funnels EVERY value of every column through a single aggregation
-    buffer: measured 41 s at 240k lineitems (one task sorting 9 full
-    column buffers), OOM at 10^12 rows — kept only as the
-    fewest-jobs option for tiny inputs."""
+    The moment stats come from one cheap aggregate pass and the three
+    quantiles per column from outliers.exact_quantiles_scalable —
+    bracket-and-count selection, bit-identical to ``percentile()`` but
+    never buffering a column in one aggregator (a ``percentile`` per
+    column funnels EVERY value through a single aggregation buffer:
+    measured 41 s at 240k lineitems, OOM at 10^12 rows)."""
     from .outliers import exact_quantiles_scalable
 
     aggs = []
@@ -220,27 +215,17 @@ def summary_stats(
             F.round(F.min(x), 4).alias(f"{c}__min"),
             F.round(F.max(x), 4).alias(f"{c}__max"),
         ]
-        if not scalable:
-            aggs += [
-                F.round(F.expr(f"percentile(cast({c} as double), 0.25)"), 4).alias(f"{c}__q25"),
-                F.round(F.expr(f"percentile(cast({c} as double), 0.5)"), 4).alias(f"{c}__median"),
-                F.round(F.expr(f"percentile(cast({c} as double), 0.75)"), 4).alias(f"{c}__q75"),
-            ]
-    wide = df.agg(*aggs)
-    if scalable:
-        qcols = []
-        for c in cols:
-            vals = exact_quantiles_scalable(df, c, [0.25, 0.5, 0.75])
-            for name, v in zip(
-                ("q25", "median", "q75"), vals or (None, None, None)
-            ):
-                lit = (
-                    F.round(F.lit(float(v)), 4)
-                    if v is not None
-                    else F.lit(None).cast("double")
-                )
-                qcols.append(lit.alias(f"{c}__{name}"))
-        wide = wide.select("*", *qcols)
+    qcols = []
+    for c in cols:
+        vals = exact_quantiles_scalable(df, c, [0.25, 0.5, 0.75])
+        for name, v in zip(("q25", "median", "q75"), vals or (None, None, None)):
+            lit = (
+                F.round(F.lit(float(v)), 4)
+                if v is not None
+                else F.lit(None).cast("double")
+            )
+            qcols.append(lit.alias(f"{c}__{name}"))
+    wide = df.agg(*aggs).select("*", *qcols)
     stats = ["n", "mean", "stddev", "min", "q25", "median", "q75", "max"]
     stack_args = ", ".join(
         "'{c}', {fields}".format(

@@ -228,10 +228,10 @@ def q_quantiles_price_scalable(spark, sf_dir):
     from .operators.outliers import exact_quantiles_scalable
 
     o = _t(spark, sf_dir, "orders")
-    q1, med, q3 = exact_quantiles_scalable(o, "o_totalprice", [0.25, 0.5, 0.75])
-    return spark.createDataFrame(
-        [(round(q1, 4), round(med, 4), round(q3, 4))], "q1 double, median double, q3 double"
-    )
+    qs = exact_quantiles_scalable(o, "o_totalprice", [0.25, 0.5, 0.75])
+    # empty or all-null column: one all-NULL row, like the oracle's aggregate
+    row = tuple(round(v, 4) for v in qs) if qs is not None else (None,) * 3
+    return spark.createDataFrame([row], "q1 double, median double, q3 double")
 
 
 @register(
@@ -300,16 +300,19 @@ def q_orders_profile(spark, sf_dir):
     from .operators.outliers import exact_quantiles_scalable
 
     o = _t(spark, sf_dir, "orders")
-    q1, q3 = exact_quantiles_scalable(o, "o_totalprice", [0.25, 0.75])
-    lo, hi = q1 - 1.5 * (q3 - q1), q3 + 1.5 * (q3 - q1)
+    qs = exact_quantiles_scalable(o, "o_totalprice", [0.25, 0.75])
+    # empty or all-null column: no fence, so NULL bounds and zero
+    # outliers, like the oracle
+    lo = hi = None
+    if qs is not None:
+        q1, q3 = qs
+        lo, hi = q1 - 1.5 * (q3 - q1), q3 + 1.5 * (q3 - q1)
+    lo_c, hi_c = F.lit(lo).cast("double"), F.lit(hi).cast("double")
     return o.agg(
-        F.round(F.lit(lo), 4).alias("lo"),
-        F.round(F.lit(hi), 4).alias("hi"),
-        F.sum(
-            (
-                (F.col("o_totalprice") < F.lit(lo))
-                | (F.col("o_totalprice") > F.lit(hi))
-            ).cast("bigint")
+        F.round(lo_c, 4).alias("lo"),
+        F.round(hi_c, 4).alias("hi"),
+        F.count(
+            F.when((F.col("o_totalprice") < lo_c) | (F.col("o_totalprice") > hi_c), 1)
         ).alias("n_outliers"),
         F.round(F.min("o_totalprice"), 4).alias("price_min"),
         F.round(F.max("o_totalprice"), 4).alias("price_max"),

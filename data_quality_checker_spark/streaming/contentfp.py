@@ -30,11 +30,13 @@ Per micro-batch:
    of the EARLIEST registry match: min over (reg_batch, keeper id), so
    first-seen-BATCH genuinely wins (``fp_store`` records the
    registering batch), mirroring the SHA registry;
-4. register the batch's surviving cluster keepers (not already matched
-   to the registry) into both tables, gated on the same O(1) per-batch
-   marker-file idempotence protocol as the SHA registry, with the same
-   generic per-bucket compaction (incremental.compact_table_buckets) so
-   neither table degrades into a small-file storm.
+4. in the tick's commit, which runs only after the decisions are
+   written (incremental.process_and_write), register the batch's
+   surviving cluster keepers (not already matched to the registry) into
+   both tables, gated on the same O(1) per-batch marker-file idempotence
+   protocol as the SHA registry, with the same generic per-bucket
+   compaction (incremental.compact_table_buckets) so neither table
+   degrades into a small-file storm.
 
 Scale shape: every cross-table touch is an equi-join on a
 hash-partitioned key with the partition list pruned to the batch's own
@@ -45,7 +47,7 @@ candidates; audio bytes never leave stage 1.
 from __future__ import annotations
 
 import os
-import threading
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -66,30 +68,13 @@ from .incremental import (
     compact_table_buckets,
     pin_bucket_count,
     recover_table_compaction,
+    run_concurrently,
 )
 
 # Upper bound; the effective fan-out is pinned per state_dir at first
 # tick (incremental.pin_bucket_count) so small streams don't pay a
 # 256-dir append per tick — see the N_SHA_BUCKETS comment.
 N_FP_BUCKETS = 256
-
-# DQC_TIMING=1 prints per-section wall times between the tick's eager
-# actions ("[fp-tick] <label>: <sec>") — the observability that found the
-# round-5 fixed-cost regression; zero overhead when unset.
-_TIMING = os.environ.get("DQC_TIMING") == "1"
-_t_prev: list[float] = []
-
-
-def _t(label: str) -> None:
-    if not _TIMING:
-        return
-    import time
-
-    now = time.time()
-    if _t_prev and label != "start":
-        print(f"[fp-tick] {label}: {now - _t_prev[0]:.1f}s", flush=True)
-    _t_prev[:] = [now]
-
 
 def _tokens_path(state_dir: str) -> str:
     return os.path.join(state_dir, "fp_tokens")
@@ -142,14 +127,18 @@ def process_content_increment(
     max_token_df: int | str | None = "auto",
     keys: DataFrame | None = None,
     fps: DataFrame | None = None,
-) -> DataFrame:
+) -> tuple[DataFrame, Callable[[], None]]:
     """Score one micro-batch for content duplicates within AND across
-    batches → (clip_id, content_keeper_id, is_content_dup) for every
-    batch clip whose payload group carries ≥1 fingerprint token — clips
-    of undecodable or token-free (all-degenerate silence windows, or
-    every token df-capped) groups are absent, since no token can ever
-    pair them (callers must left-join, as process_and_write does).
-    Idempotent per batch_id.
+    batches → ``(flags, commit)``. ``flags`` is a persisted
+    (clip_id, content_keeper_id, is_content_dup) frame for every batch
+    clip whose payload group carries ≥1 fingerprint token — clips of
+    undecodable or token-free (all-degenerate silence windows, or every
+    token df-capped) groups are absent, since no token can ever pair
+    them (callers must left-join, as process_and_write does); the caller
+    unpersists it. Nothing is written here: ``commit()`` registers the
+    batch's new keepers (both appends, batch marker, compaction), then
+    releases the frames this tick persisted; run it once the decisions
+    built from ``flags`` are written. Idempotent per batch_id.
 
     The whole tier runs at REPRESENTATIVE level (payload_reps: one rep
     per distinct (sha1, codec, sr_hz) key — the same collapse as
@@ -176,7 +165,6 @@ def process_content_increment(
     base tier's single decode + sha pass; when omitted the tick computes
     them itself (one sha pass, one rep-level decode pass). Caller-owned
     frames are never unpersisted here."""
-    _t("start")
     recover_table_compaction(state_dir, "fp_tokens", "tbkt", "fptok")
     recover_table_compaction(state_dir, "fp_store", "cbkt", "fpstore")
     # effective bucket fan-out, pinned per state_dir at first tick (both
@@ -185,7 +173,6 @@ def process_content_increment(
     n_bkt = pin_bucket_count(
         state_dir, "n_fp_buckets", "fp_tokens", new_clips.count, N_FP_BUCKETS
     )
-    _t("recover")
     batch_seen = os.path.exists(_marker(state_dir, batch_id))
 
     owned: list[DataFrame] = []
@@ -233,11 +220,9 @@ def process_content_increment(
             .distinct()
             .collect()
         )
-        _t("cap+toks+probe_buckets")
         reg_toks = _read_bucketed(
             spark, _tokens_path(state_dir), "tbkt", probe_buckets
         )
-        _t("regtoks_listing")
         cross = None
         if reg_toks is not None:
             # same candidate discipline as the batch operator: shared
@@ -275,7 +260,6 @@ def process_content_increment(
             store = _read_bucketed(
                 spark, _store_path(state_dir), "cbkt", keeper_buckets
             )
-            _t("cand+keeper_buckets+store_listing")
             if store is not None:
                 # reg_batch: the batch that registered each keeper.
                 # Registries written before the columns existed read as
@@ -411,25 +395,29 @@ def process_content_increment(
             )
         )
 
-        # Materialize BEFORE the registration block: the registration
-        # derives keepers/ktoks/kfps from this frame ~5 times (two table
-        # writes, two bucket-list collects, the returned count), and its
-        # appends land in the very fp_tokens/fp_store paths the
-        # unpersisted plan would re-read — correctness must not hinge on
-        # the file-listing snapshot racing the self-append. The persist
-        # freezes the probe-join results first.
+        # Materialize BEFORE the commit: the registration derives
+        # keepers/ktoks/kfps from this frame several times (two table
+        # writes plus the caller's decisions join), and its appends land
+        # in the very fp_tokens/fp_store paths the unpersisted plan
+        # would re-read. The persist freezes the probe-join results.
         rows = out.persist()
-        _t("plan_build")
         rows.count()
-        _t("rows_count")
+    except BaseException:
+        for frame in owned:
+            frame.unpersist()
+        raise
 
-        if not batch_seen:
+    def commit() -> None:
+        try:
+            if batch_seen:
+                return
             # register the batch's NEW keepers: not a dup of anything.
             # ktoks filters the already-capped token stream, so hub
             # tokens never enter the registry's posting lists
             keepers = rows.where(~F.col("is_content_dup")).select("clip_id")
             kfps = fps.join(keepers, "clip_id", "left_semi")
             ktoks = toks.join(keepers, "clip_id", "left_semi")
+
             # repartition by the partition column: ONE file per touched
             # bucket per tick regardless of upstream task count. toks is
             # a persisted 8-partition frame and the keeper semi join is
@@ -466,30 +454,10 @@ def process_content_increment(
                 )
 
             # The two appends target DIFFERENT tables and read only
-            # persisted/broadcast inputs, so submit them from two threads:
-            # each write's cost is dominated by the job-scheduling +
-            # parquet task-commit floor (~1-2.5 s at the pinned 32 dirs,
-            # measured), and overlapping them turns fixed-cost SUM into
-            # fixed-cost MAX per tick. Exceptions propagate.
-            _errs: list[BaseException] = []
-
-            def _guard(fn):
-                try:
-                    fn()
-                except BaseException as exc:  # noqa: BLE001 - re-raised
-                    _errs.append(exc)
-
-            threads = [
-                threading.Thread(target=_guard, args=(fn,), daemon=True)
-                for fn in (_write_tokens, _write_store)
-            ]
-            for th in threads:
-                th.start()
-            for th in threads:
-                th.join()
-            if _errs:
-                raise _errs[0]
-            _t("ktoks+store_write")
+            # persisted/broadcast inputs: each write's cost is dominated by
+            # the job-scheduling + parquet task-commit floor (~1-2.5 s at
+            # the pinned 32 dirs, measured), so they overlap.
+            run_concurrently(_write_tokens, _write_store)
             os.makedirs(os.path.dirname(_marker(state_dir, batch_id)), exist_ok=True)
             with open(_marker(state_dir, batch_id), "w"):
                 pass
@@ -506,8 +474,8 @@ def process_content_increment(
             compact_table_buckets(
                 spark, state_dir, all_buckets, "fp_store", "cbkt", "fpstore"
             )
-            _t("compaction")
-        return rows
-    finally:
-        for frame in owned:
-            frame.unpersist()
+        finally:
+            for frame in owned:
+                frame.unpersist()
+
+    return rows, commit

@@ -28,15 +28,19 @@ stages (enrich/decide) + a persistent SHA registry:
   holding more than ``MAX_BUCKET_FILES`` parquet files is rewritten to
   a single file (tmp dir + two renames, with a leftover-dir recovery
   sweep at the next tick for the crash window between the renames);
-* ``foreachBatch`` is at-least-once, so BOTH persistent effects are
-  idempotent per batch_id: the registry append is gated on an O(1)
-  per-batch marker file (an existence probe — NOT a collect of an
-  ever-growing marker table), and the decisions output is written
-  partitioned by batch_id with dynamic partition overwrite — a replayed
-  batch atomically replaces its own partition instead of appending
-  duplicate rows. Decisions are recomputed deterministically on replay
-  (the registry already contains the batch's keepers; the keeper for
-  every sha is unchanged), so the overwrite converges.
+* ``foreachBatch`` is at-least-once, so a tick runs in ONE order, kept
+  in process_and_write alone: score every tier against the registries
+  as they stand → write the decisions once, partitioned by batch_id with
+  dynamic partition overwrite (a replayed batch atomically replaces its
+  own partition instead of appending duplicate rows) → commit each
+  tier's state: its appends, then an O(1) per-batch marker file (an
+  existence probe — NOT a collect of an ever-growing marker table), then
+  its compaction. The decisions plan reads registry files the compaction
+  replaces, so it must be written before any commit. A crash before the
+  commit replays against an unchanged registry and recomputes the same
+  decisions; a crash after the append but before the marker replays
+  with the batch's keepers already registered, so the anti-join
+  re-appends nothing and every sha keeps its keeper.
 
 The global IQR duration fence is whole-dataset state and cannot be
 "streamed" — it is calibrated once from a static sample (or a previous
@@ -55,7 +59,9 @@ import json
 import os
 import shutil
 import threading
+from typing import Callable
 
+from pyspark import InheritableThread
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -284,9 +290,36 @@ def compact_table_buckets(
     shutil.rmtree(tmproot, ignore_errors=True)
 
 
-# original (sha-specific) names, kept for call sites and tests
-_recover_compaction = recover_table_compaction
-_compact_buckets = compact_table_buckets
+def run_concurrently(*fns: Callable):
+    """Call each of ``fns`` on its own thread; → their results, in order.
+    Re-raises the first error once every thread has finished. Each tick
+    phase is dominated by driver-paced fixed cost (job scheduling,
+    parquet task commits), so submitting independent Spark jobs from
+    separate threads turns their cost floors from a sum into a max.
+
+    The threads inherit the caller's Spark local properties, so their
+    jobs stay in the stream tick's job group (event-log attribution,
+    cancellation when the query stops)."""
+    results: list = [None] * len(fns)
+    errors: list[BaseException] = []
+
+    def _run(i: int, fn: Callable) -> None:
+        try:
+            results[i] = fn()
+        except BaseException as exc:  # noqa: BLE001 - re-raised below
+            errors.append(exc)
+
+    threads = [
+        InheritableThread(_run, args=(i, fn), daemon=True)
+        for i, fn in enumerate(fns)
+    ]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join()
+    if errors:
+        raise errors[0]
+    return results
 
 
 def read_registry(
@@ -325,11 +358,15 @@ def process_increment(
     hashed: DataFrame | None = None,
     stats: DataFrame | None = None,
     n_buckets: int | None = None,
-) -> DataFrame:
-    """Score one micro-batch against (and then update) the SHA registry.
-    Returns the decisions frame for the batch. Idempotent per batch_id
-    (an O(1) marker-file probe — the batch count grows without bound, so
-    collecting a marker table each tick would too).
+) -> tuple[DataFrame, Callable[[], None]]:
+    """Score one micro-batch against the SHA registry → ``(decisions,
+    commit)``. Nothing is written here: ``commit()`` registers the
+    batch's new keepers (append, batch marker, compaction of the touched
+    buckets) and must run only after ``decisions`` has been written,
+    since that plan reads registry files the compaction replaces.
+    Idempotent per batch_id (an O(1) marker-file probe — the batch count
+    grows without bound, so collecting a marker table each tick would
+    too).
 
     ``hashed`` / ``stats`` — precomputed pipeline.hashed_frame /
     pipeline.audio_stats_table frames; pass them when another tier in
@@ -337,7 +374,7 @@ def process_increment(
     content_dedup path computes both ONCE for the base and content
     tiers). ``n_buckets`` overrides the registry bucket fan-out on the
     FIRST tick only (pinned in registry_meta.json thereafter)."""
-    _recover_compaction(state_dir)
+    recover_table_compaction(state_dir)
     batch_seen = os.path.exists(_batch_marker(state_dir, batch_id))
 
     full_hashed = hashed  # 4-col pipeline.hashed_frame form, for enrich
@@ -392,7 +429,9 @@ def process_increment(
     ).drop("keeper_clip_id")
     decisions = decide(flagged, cfg, dur_bounds)
 
-    if not batch_seen:
+    def commit() -> None:
+        if batch_seen:
+            return
         # repartition by the partition column: exactly ONE parquet file
         # per touched bucket per tick, whatever the upstream task count
         # (W write tasks would otherwise append up to W files per bucket
@@ -406,8 +445,9 @@ def process_increment(
         os.makedirs(_batches_path(state_dir), exist_ok=True)
         with open(_batch_marker(state_dir, batch_id), "w"):
             pass
-        _compact_buckets(spark, state_dir, batch_buckets)
-    return decisions
+        compact_table_buckets(spark, state_dir, batch_buckets)
+
+    return decisions, commit
 
 
 def process_and_write(
@@ -420,10 +460,13 @@ def process_and_write(
     dur_bounds: tuple[float, float] | None = None,
     content_dedup: bool = False,
 ) -> None:
-    """One foreachBatch tick: score + idempotently persist. The decisions
+    """One foreachBatch tick, in the only order that keeps replay
+    exactly-once: score every tier → write the decisions once → commit
+    each tier's state (appends, batch marker, compaction). The decisions
     land partitioned by batch_id with dynamic partition overwrite, so an
     at-least-once replay of a micro-batch replaces its own partition
-    instead of appending duplicates.
+    instead of appending duplicates; the registries change only after
+    that write, so a replay scores against the same state.
 
     ``content_dedup=True`` additionally probes/updates the cross-batch
     fingerprint registry (streaming/contentfp.py): clips whose CONTENT
@@ -450,46 +493,27 @@ def process_and_write(
     for sess in {spark, batch_df.sparkSession}:
         sess.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
-    # single writer shared by both paths (the content path must write
-    # BEFORE its finally releases the frames the plan depends on, so a
-    # tail-only write can't serve it — a helper keeps the layout/mode
-    # from diverging between the two call sites)
-    def _write(d: DataFrame) -> None:
-        d.withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "overwrite"
-        ).partitionBy("batch_id").parquet(output_dir)
+    hashed = stats = flags = None
+    try:
+        if not content_dedup:
+            decisions, commit = process_increment(
+                spark, batch_df, state_dir, batch_id, cfg, dur_bounds
+            )
+            commits = [commit]
+        else:
+            from ..operators.audiofp import CONTENT_DUP_RULE, payload_reps
+            from ..pipeline import audio_stats_table, hashed_frame
+            from .contentfp import process_content_increment
 
-    flags = None
-    if not content_dedup:
-        decisions = process_increment(
-            spark, batch_df, state_dir, batch_id, cfg, dur_bounds
-        )
-    else:
-        from ..operators.audiofp import CONTENT_DUP_RULE, payload_reps
-        from ..pipeline import audio_stats_table, hashed_frame
-        from .contentfp import process_content_increment
+            hashed = hashed_frame(batch_df).persist()
+            hashed.count()
+            stats = audio_stats_table(
+                batch_df, cfg, hashed, with_fingerprints=True
+            ).persist()
+            stats.count()
 
-        hashed = hashed_frame(batch_df).persist()
-        hashed.count()
-        stats = audio_stats_table(
-            batch_df, cfg, hashed, with_fingerprints=True
-        ).persist()
-        stats.count()
-        try:
-            # The sha tick and the content tick touch DISJOINT registry
-            # tables (sha_registry vs fp_tokens/fp_store), share only the
-            # persisted hashed/stats frames, and are each dominated by
-            # driver-paced fixed cost (probe collects, appends,
-            # compaction checks) — submitting them from two threads
-            # overlaps those job floors, turning the per-tick fixed cost
-            # from SUM into ~MAX (same discipline as the threaded dual
-            # registry append inside the content tick). The shared
-            # registry_meta.json pin is lock-protected (pin_bucket_count).
-            results: dict[str, DataFrame] = {}
-            _errs: list[BaseException] = []
-
-            def _sha_tick() -> None:
-                results["decisions"] = process_increment(
+            def _sha_tick():
+                return process_increment(
                     spark,
                     batch_df,
                     state_dir,
@@ -500,33 +524,24 @@ def process_and_write(
                     stats=stats,
                 )
 
-            def _content_tick() -> None:
+            def _content_tick():
                 keys = payload_reps(batch_df, hashed=hashed)
                 fps = stats.select(
                     F.col("rep_id").alias("clip_id"), "n_subfp", "fp"
                 )
-                results["flags"] = process_content_increment(
+                return process_content_increment(
                     spark, batch_df, state_dir, batch_id, keys=keys, fps=fps
                 )
 
-            def _guard(fn):
-                try:
-                    fn()
-                except BaseException as exc:  # noqa: BLE001 - re-raised
-                    _errs.append(exc)
-
-            threads = [
-                threading.Thread(target=_guard, args=(fn,), daemon=True)
-                for fn in (_sha_tick, _content_tick)
-            ]
-            for th in threads:
-                th.start()
-            for th in threads:
-                th.join()
-            if _errs:
-                raise _errs[0]
-            decisions = results["decisions"]
-            flags = results["flags"]
+            # The two tiers touch DISJOINT registry tables (sha_registry
+            # vs fp_tokens/fp_store) and share only the persisted
+            # hashed/stats frames, so both their scoring and their
+            # commits overlap; the shared registry_meta.json pin is
+            # lock-protected (pin_bucket_count).
+            (decisions, sha_commit), (flags, content_commit) = run_concurrently(
+                _sha_tick, _content_tick
+            )
+            commits = [sha_commit, content_commit]
             dup = F.coalesce(F.col("is_content_dup"), F.lit(False))
             decisions = (
                 decisions.join(
@@ -545,14 +560,14 @@ def process_and_write(
                 .withColumn("keep", F.col("keep") & ~dup)
                 .drop("is_content_dup")
             )
-            _write(decisions)
-        finally:
-            stats.unpersist()
-            hashed.unpersist()
-            if flags is not None:
-                flags.unpersist()
-        return
-    _write(decisions)
+        decisions.withColumn("batch_id", F.lit(batch_id)).write.mode(
+            "overwrite"
+        ).partitionBy("batch_id").parquet(output_dir)
+        run_concurrently(*commits)
+    finally:
+        for frame in (flags, stats, hashed):
+            if frame is not None:
+                frame.unpersist()
 
 
 def stream_quality_filter(

@@ -208,9 +208,11 @@ def test_exact_quantiles_tie_straddle_bracket(spark):
 
 
 def test_summary_stats_scalable_equals_legacy(spark):
-    """summary_stats' default scalable path (cheap moments + bracketed
-    exact quantiles) must reproduce the single-buffer percentile path
-    exactly, including all-null and constant columns."""
+    """summary_stats (cheap moments + bracketed exact quantiles) must
+    reproduce inline single-buffer percentile() quantiles and moment
+    aggregates exactly, including all-null and constant columns."""
+    from functools import reduce
+
     import pandas as pd
 
     from data_quality_checker_spark.operators.metrics import summary_stats
@@ -224,5 +226,63 @@ def test_summary_stats_scalable_equals_legacy(spark):
     )
     df = spark.createDataFrame(pdf.astype({"c": "float64"}))
     new = summary_stats(df, ["a", "b", "c"]).orderBy("column").toPandas()
-    old = summary_stats(df, ["a", "b", "c"], scalable=False).orderBy("column").toPandas()
+    quantiles = (("q25", 0.25), ("median", 0.5), ("q75", 0.75))
+    old = (
+        reduce(
+            lambda l, r: l.unionByName(r),
+            [
+                df.agg(
+                    F.lit(c).alias("column"),
+                    F.count(F.col(c)).alias("n"),
+                    F.round(F.avg(c), 4).alias("mean"),
+                    F.round(F.stddev_samp(c), 4).alias("stddev"),
+                    F.round(F.min(c), 4).alias("min"),
+                    *[
+                        F.round(F.expr(f"percentile(cast({c} as double), {q})"), 4).alias(name)
+                        for name, q in quantiles
+                    ],
+                    F.round(F.max(c), 4).alias("max"),
+                )
+                for c in ("a", "b", "c")
+            ],
+        )
+        .orderBy("column")
+        .toPandas()
+    )
     pd.testing.assert_frame_equal(new[sorted(new.columns)], old[sorted(old.columns)])
+
+
+@pytest.mark.parametrize("shape", ["empty", "all_null"])
+@pytest.mark.parametrize("name", ["orders_profile", "quantiles_price_scalable"])
+def test_orders_quantile_queries_on_degenerate_column(spark, tmp_path, shape, name):
+    """An empty orders table, or one whose o_totalprice is all NULL, has
+    no quantiles: the registry query must return its DuckDB oracle's
+    answer (NULL quantiles/fence, zero outliers), not raise."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from data_quality_checker_spark import queries as registry
+
+    schema = pa.schema(
+        [
+            ("o_orderkey", pa.int64()),
+            ("o_custkey", pa.int64()),
+            ("o_orderstatus", pa.string()),
+            ("o_totalprice", pa.float64()),
+            ("o_orderdate", pa.timestamp("us")),
+            ("o_orderpriority", pa.string()),
+        ]
+    )
+    n = 0 if shape == "empty" else 3
+    table = pa.table([pa.nulls(n, f.type) for f in schema], schema=schema)
+    pq.write_table(table, str(tmp_path / "orders.parquet"))
+
+    got = registry.queries()[name](spark, str(tmp_path))
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW orders AS SELECT * FROM read_parquet('{tmp_path / 'orders.parquet'}')"
+    )
+    cur = con.execute(registry._ORACLES[name])
+    assert got.columns == [d[0] for d in cur.description]
+    assert [tuple(r) for r in got.collect()] == cur.fetchall()

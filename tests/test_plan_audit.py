@@ -36,13 +36,11 @@ _EXECUTES_ON_BUILD = {
 
 # intended nested-loop designs (see module docstring), plus queries whose
 # only NLJ is the scalar-subquery shape: a crossJoin against the broadcast
-# of a ONE-ROW aggregate (IQR fence, grand total, last_day, branch
-# counts). A 1-row broadcast side makes the "nested loop" a single pass
+# of a ONE-ROW aggregate (grand total, last_day, branch counts). A 1-row broadcast side makes the "nested loop" a single pass
 # over the big side — the correct plan for attaching a global scalar.
 _NLJ_ALLOWED = {
     "ann_topk",
     "embed_neardup",
-    "orders_profile",      # broadcast (q1, q3) fence row
     "documents_profile",   # broadcast dominant-class row
     "trend_daily",         # broadcast last_day row
     "set_ops_users",       # broadcast per-branch count rows

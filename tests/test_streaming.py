@@ -51,9 +51,10 @@ def test_incremental_matches_batch(spark, clips_df, halves, tmp_path_factory):
     got = {}
     for bid, f in enumerate(files):
         batch = spark.read.parquet(f)
-        dec = process_increment(spark, batch, state, bid)
+        dec, commit = process_increment(spark, batch, state, bid)
         for r in dec.collect():
             got[r["clip_id"]] = (r["keep"], tuple(r["rules_fired"]))
+        commit()
 
     expected = {
         r["clip_id"]: (r["keep"], tuple(r["rules_fired"]))
@@ -66,10 +67,14 @@ def test_increment_idempotent_per_batch(spark, halves, tmp_path_factory):
     state = str(tmp_path_factory.mktemp("stream_state2"))
     f = sorted(glob.glob(os.path.join(halves, "*.parquet")))[0]
     batch = spark.read.parquet(f)
-    process_increment(spark, batch, state, 0).count()
+    dec, commit = process_increment(spark, batch, state, 0)
+    dec.count()
+    commit()
     n1 = read_registry(spark, state).count()
     # replay of the same batch_id must not grow the registry
-    process_increment(spark, batch, state, 0).count()
+    dec, commit = process_increment(spark, batch, state, 0)
+    dec.count()
+    commit()
     n2 = read_registry(spark, state).count()
     assert n1 == n2
 
@@ -103,7 +108,9 @@ def test_registry_read_is_bucket_pruned(spark, halves, tmp_path_factory):
     # explicit fan-out override (first tick pins it): with the derived
     # sandbox-sized count every bucket would be occupied and no foreign
     # bucket would exist to plant the corrupt file in
-    process_increment(spark, b0, state, 0, n_buckets=256).count()
+    dec, commit = process_increment(spark, b0, state, 0, n_buckets=256)
+    dec.count()
+    commit()
 
     from data_quality_checker_spark.streaming.incremental import (
         load_registry_meta,
@@ -127,7 +134,9 @@ def test_registry_read_is_bucket_pruned(spark, halves, tmp_path_factory):
         f.write(b"this is not a parquet file")
 
     # would raise on an unpruned scan; must succeed on a pruned one
-    process_increment(spark, b1, state, 1).count()
+    dec, commit = process_increment(spark, b1, state, 1)
+    dec.count()
+    commit()
 
 
 def test_output_replay_is_idempotent(spark, halves, tmp_path_factory):
@@ -177,8 +186,10 @@ def test_registry_compaction_bounds_file_count(
             break
         f = str(src / f"b{bid}.parquet")
         pq.write_table(pa.Table.from_pandas(part, preserve_index=False), f)
-        # not consuming decisions: only the registry append is eager
-        inc.process_increment(spark, spark.read.parquet(f), state, bid)
+        # registry-only: the decisions plan is never run, only the
+        # commit (append, batch marker, compaction)
+        _, commit = inc.process_increment(spark, spark.read.parquet(f), state, bid)
+        commit()
 
     bucket = os.path.join(state, "sha_registry", "sbkt=0")
     n_files = sum(1 for f in os.listdir(bucket) if f.endswith(".parquet"))
@@ -308,13 +319,17 @@ def test_multi_batch_streaming_keeps_all_batches(spark, clips_df, tmp_path_facto
     """Regression: with >maxFilesPerTrigger input files the stream runs
     MULTIPLE micro-batches; every batch's decisions partition must
     survive (a static-overwrite write would truncate all but the last —
-    the conf must reach the micro-batch's cloned session)."""
+    the conf must reach the micro-batch's cloned session). At 2 files
+    per trigger the 24 files make 12 ticks, enough for registry buckets
+    to cross MAX_BUCKET_FILES and compact mid-stream: the stream must
+    drain in ONE query start (a tick whose decisions plan read registry
+    files its own compaction replaced would kill the query)."""
     src = str(tmp_path_factory.mktemp("many_in") / "clips")
     clips_df.repartition(24).write.parquet(src)
     out = str(tmp_path_factory.mktemp("many_out"))
     ckpt = str(tmp_path_factory.mktemp("many_ckpt"))
     state = str(tmp_path_factory.mktemp("many_state"))
-    q = stream_quality_filter(spark, src, out, ckpt, state)
+    q = stream_quality_filter(spark, src, out, ckpt, state, max_files_per_trigger=2)
     q.awaitTermination(300)
     dec = spark.read.parquet(out)
     batches = [r["batch_id"] for r in dec.select("batch_id").distinct().collect()]

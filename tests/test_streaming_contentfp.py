@@ -61,8 +61,9 @@ def test_cross_batch_and_within_batch(spark, state_dir):
             ("b1_other", encode_wav(_speechlike(32, 2.5), SR), SR, 2500, "wav", "t"),
         ],
     )
-    out1 = process_content_increment(spark, batch1, state_dir, 0)
+    out1, commit = process_content_increment(spark, batch1, state_dir, 0)
     f1 = _flags(out1)
+    commit()
     out1.unpersist()
     assert f1 == {
         "b1_orig": ("b1_orig", False),
@@ -80,8 +81,9 @@ def test_cross_batch_and_within_batch(spark, state_dir):
             ("b2_new", encode_wav(_speechlike(33, 2.5), SR), SR, 2500, "wav", "t"),
         ],
     )
-    out2 = process_content_increment(spark, batch2, state_dir, 1)
+    out2, commit = process_content_increment(spark, batch2, state_dir, 1)
     f2 = _flags(out2)
+    commit()
     out2.unpersist()
     assert f2["b2_gaincopy"] == ("b1_orig", True)  # earlier batch's keeper wins
     assert f2["b2_v1"] == ("b2_v1", False)
@@ -89,8 +91,9 @@ def test_cross_batch_and_within_batch(spark, state_dir):
     assert f2["b2_new"] == ("b2_new", False)
 
     # replay of batch 1 (at-least-once): same answers, no re-registration
-    replay = process_content_increment(spark, batch1, state_dir, 0)
+    replay, commit = process_content_increment(spark, batch1, state_dir, 0)
     fr = _flags(replay)
+    commit()
     replay.unpersist()
     # b1_orig is already IN the registry from the first run of batch 0 —
     # the replayed scoring must still crown it keeper of its own content
@@ -103,8 +106,9 @@ def test_cross_batch_and_within_batch(spark, state_dir):
         spark,
         [("b3_v3", encode_wav(base2 * 0.85, SR), SR, 2500, "wav", "t")],
     )
-    out3 = process_content_increment(spark, batch3, state_dir, 2)
+    out3, commit = process_content_increment(spark, batch3, state_dir, 2)
     f3 = _flags(out3)
+    commit()
     out3.unpersist()
     assert f3["b3_v3"] == ("b2_v1", True)  # b2_v2 was never registered
 
@@ -117,8 +121,9 @@ def test_unrelated_clips_never_flagged(spark, state_dir):
             for i in range(4)
         ],
     )
-    out = process_content_increment(spark, b, state_dir, 0)
+    out, commit = process_content_increment(spark, b, state_dir, 0)
     flags = _flags(out)
+    commit()
     out.unpersist()
     assert all(not dup for _, dup in flags.values())
 
@@ -225,8 +230,9 @@ def test_content_registry_compaction_bounds_file_count(
             )
             for j in range(2)
         ]
-        out = process_content_increment(spark, _df(spark, rows), state, bid)
+        out, commit = process_content_increment(spark, _df(spark, rows), state, bid)
         assert out.where("is_content_dup").count() == 0, bid  # all-new content
+        commit()
         out.unpersist()
 
     for table, part in (("fp_tokens", "tbkt"), ("fp_store", "cbkt")):
@@ -240,7 +246,8 @@ def test_content_registry_compaction_bounds_file_count(
         spark,
         [("z_copy", enc(_speechlike(100, secs=1.2) * 0.6), SR, 1200, "wav", "tx")],
     )
-    out = process_content_increment(spark, probe, state, n_batches)
+    out, commit = process_content_increment(spark, probe, state, n_batches)
     flags = _flags(out)
     assert flags["z_copy"] == ("b00_c0", True), flags
+    commit()
     out.unpersist()
